@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sparkall_spark.mappings import EntityMapping, MappingIndex
+from sparkall_spark.sources.files import read_files
 
 NS = "http://sparkall.io/ns/"
 PREFIX_BLOCK = f"PREFIX sa: <{NS}>\n"
@@ -37,12 +38,11 @@ def _normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-def _read_events_parquet(spark: SparkSession, mapping: EntityMapping) -> DataFrame:
-    """Custom reader (registered below) for the events table's
-    generator-dependent timestamp encoding — demonstrates the
-    reader-registry extension point."""
+def _read_events(spark: SparkSession, path: str) -> DataFrame:
+    """The events table, whose timestamp encoding depends on the
+    generator — read through the shared schema memo, then normalized."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _normalize_event_ts(spark.read.parquet(mapping.source))
+    return _normalize_event_ts(read_files(spark, "parquet", path, {}))
 
 
 def _m(name: str, table: str, sf_dir: str, id_attr: str,
@@ -60,17 +60,18 @@ def _m(name: str, table: str, sf_dir: str, id_attr: str,
 
 from sparkall_spark.sources import register_reader  # noqa: E402
 
-register_reader("events_parquet", _read_events_parquet)
+# the events table as a custom source type: the reader-registry extension point
+register_reader("events_parquet", lambda spark, m: _read_events(spark, m.source))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table, normalizing the events table's
-    generator-dependent timestamp encoding (nanos-as-long or
-    TIMESTAMP_NTZ) to plain TimestampType — see _normalize_event_ts."""
+    """Read one fixture table through the same readers (and schema memo)
+    as the mappings; the events timestamp is normalized to TimestampType
+    — see _normalize_event_ts."""
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return _normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return _read_events(spark, path)
+    return read_files(spark, "parquet", path, {})
 
 
 def fno_mappings_ttl(sf_dir: str) -> str:

@@ -123,6 +123,19 @@ _TOKEN_RE = re.compile(
 )
 
 
+# SPARQL 1.1 §19.7 ECHAR escapes inside string literals
+_ECHARS = {"t": "\t", "n": "\n", "r": "\r", "b": "\b", "f": "\f",
+           '"': '"', "'": "'", "\\": "\\"}
+_ESCAPE_RE = re.compile(r"\\(.)", re.DOTALL)
+
+
+def unquote(tok: str) -> str:
+    """The value of a quoted string token, ECHAR escapes decoded.  A
+    backslash before any other character stays verbatim, so regex
+    classes such as ``\\w`` reach rlike patterns unchanged."""
+    return _ESCAPE_RE.sub(lambda m: _ECHARS.get(m.group(1), m.group(0)), tok[1:-1])
+
+
 def _tokenize(text: str) -> list[tuple[str, str]]:
     out, i = [], 0
     while i < len(text):
@@ -212,7 +225,7 @@ class _Parser:
         if kind == "num":
             return ELit(float(val) if "." in val else int(val))
         if kind == "str":
-            return ELit(val[1:-1].replace('\\"', '"'))
+            return ELit(unquote(val))
         if kind == "name":
             fn = val.lower()
             if fn not in _FUNCTIONS:

@@ -36,6 +36,7 @@ from sparkall_spark.plans.exprs import (
     expr_vars,
     is_boolean_expr,
     parse_expr,
+    unquote,
 )
 from sparkall_spark.plans.model import (
     Aggregation,
@@ -63,15 +64,31 @@ class SparqlParseError(ValueError):
     pass
 
 
+def _scan(text: str, start: int = 0):
+    """``(index, char, quoted)`` for each character from ``start``;
+    ``quoted`` is True inside a double-quoted literal, quotes included.
+    A backslash in a literal escapes the next character (ECHAR)."""
+    in_str = esc = False
+    for i in range(start, len(text)):
+        c = text[i]
+        if not in_str:
+            in_str = c == '"'
+            yield i, c, in_str
+            continue
+        yield i, c, True
+        if esc:
+            esc = False
+        elif c == "\\":
+            esc = True
+        elif c == '"':
+            in_str = False
+
+
 def _balanced(text: str, start: int, open_ch: str = "(", close_ch: str = ")") -> int:
     """Index just past the matching close bracket for the open at ``start``."""
     depth = 0
-    in_str = False
-    for i in range(start, len(text)):
-        c = text[i]
-        if c == '"':
-            in_str = not in_str
-        elif not in_str:
+    for i, c, quoted in _scan(text, start):
+        if not quoted:
             if c == open_ch:
                 depth += 1
             elif c == close_ch:
@@ -84,11 +101,8 @@ def _balanced(text: str, start: int, open_ch: str = "(", close_ch: str = ")") ->
 def _strip_comments(query: str) -> str:
     out = []
     for line in query.splitlines():
-        in_str = False
-        for i, c in enumerate(line):
-            if c == '"':
-                in_str = not in_str
-            elif c == "#" and not in_str:
+        for i, c, quoted in _scan(line):
+            if c == "#" and not quoted:
                 # keep IRIs like <http://...#x> intact: '#' inside <> is not a comment
                 before = line[:i]
                 if before.count("<") == before.count(">"):
@@ -170,13 +184,13 @@ def _parse_filters(
         kind = (m.group(1) or "").lower()
         if kind in ("regex", "rlike"):
             fm = re.match(
-                r"\s*\?([\w]+)\s*,\s*\"((?:[^\"\\]|\\.)*)\""
+                r"\s*\?([\w]+)\s*,\s*(\"(?:[^\"\\]|\\.)*\")"
                 r"(?:\s*,\s*\"([a-z]*)\")?\s*$",
                 inner,
             )
             if not fm:
                 raise SparqlParseError(f"bad FILTER {kind}: {inner!r}")
-            op, pattern = kind, fm.group(2)
+            op, pattern = kind, unquote(fm.group(2))
             flags = fm.group(3) or ""
             if flags not in ("", "i"):
                 raise SparqlParseError(
@@ -215,7 +229,7 @@ def _parse_filters(
                     )
                 raw = fm.group(2).strip()
                 if raw.startswith('"'):
-                    vals.append(raw.strip('"'))
+                    vals.append(unquote(raw))
                     is_str_any = True
                 else:
                     vals.append(
@@ -238,7 +252,7 @@ def _parse_filters(
                         )
                         continue
                     if raw.startswith('"'):
-                        value: str | int | float = raw.strip('"')
+                        value: str | int | float = unquote(raw)
                         is_str = True
                     else:
                         # strip optional xsd-style type tags; parse number
@@ -274,15 +288,13 @@ def _split_statements(body: str) -> list[str]:
     <>, quotes, or numbers)."""
     stmts: list[str] = []
     cur: list[str] = []
-    in_iri = in_str = False
-    for i, c in enumerate(body):
-        if c == "<" and not in_str:
+    in_iri = False
+    for i, c, quoted in _scan(body):
+        if c == "<" and not quoted:
             in_iri = True
-        elif c == ">" and not in_str:
+        elif c == ">" and not quoted:
             in_iri = False
-        elif c == '"':
-            in_str = not in_str
-        if c == "." and not in_iri and not in_str:
+        if c == "." and not in_iri and not quoted:
             prev = body[i - 1] if i else " "
             nxt = body[i + 1] if i + 1 < len(body) else " "
             if prev.isdigit() and nxt.isdigit():
@@ -595,11 +607,8 @@ _TRIPLE_TOK_RE = re.compile(r'"(?:[^"\\]|\\.)*"|\S+')
 def _split_quote_aware(text: str, sep: str) -> list[str]:
     parts: list[str] = []
     cur: list[str] = []
-    in_str = False
-    for c in text:
-        if c == '"':
-            in_str = not in_str
-        if c == sep and not in_str:
+    for _, c, quoted in _scan(text):
+        if c == sep and not quoted:
             parts.append("".join(cur))
             cur = []
         else:
@@ -676,7 +685,7 @@ def _parse_triples(
                 # literal object -> fresh var + equality filter
                 var = f"__lit{next(_PATH_VAR_COUNTER)}"
                 if obj_tok.startswith('"'):
-                    value: str | int | float = obj_tok[1:-1].replace('\\"', '"')
+                    value: str | int | float = unquote(obj_tok)
                     is_str = True
                 else:
                     value = float(obj_tok) if "." in obj_tok else int(obj_tok)
@@ -706,7 +715,7 @@ def _parse_construct_template(
                 raise SparqlParseError(
                     f"CONSTRUCT predicate cannot be a literal: {tok!r}"
                 )
-            return ("lit", tok[1:-1].replace('\\"', '"'))
+            return ("lit", unquote(tok))
         if re.fullmatch(r"-?\d+(?:\.\d+)?", tok):
             if is_pred:
                 raise SparqlParseError(
@@ -1156,7 +1165,7 @@ def parse_sparql(query: str) -> ParsedQuery:
                         row.append(None)
                         continue
                     if tok.startswith('"'):
-                        row.append(tok.strip('"'))
+                        row.append(unquote(tok))
                     else:
                         row.append(
                             float(tok)
@@ -1194,7 +1203,7 @@ def parse_sparql(query: str) -> ParsedQuery:
             is_str = False
             for tok in re.findall(r'"(?:[^"\\]|\\.)*"|\S+', inner):
                 if tok.startswith('"'):
-                    vals.append(tok.strip('"'))
+                    vals.append(unquote(tok))
                     is_str = True
                 else:
                     vals.append(
@@ -1440,7 +1449,7 @@ def _parse_having(
                 alias = match.alias
             raw = m.group(5).strip()
             if raw.startswith('"'):
-                value: str | int | float = raw.strip('"')
+                value: str | int | float = unquote(raw)
                 is_str = True
             else:
                 value = float(raw) if "." in raw else int(raw)

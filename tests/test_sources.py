@@ -361,3 +361,101 @@ def test_json_corrupt_records_are_data(spark, tmp_path):
     dropped = load_source(spark, mapping(mode="DROPMALFORMED"))
     assert {r["doc_id"] for r in dropped.collect()} == {1, 2}
     assert "_corrupt_record" not in dropped.columns
+
+
+# ---------------------------------------------------------------------------
+# Session schema memo (sources/files.py): a repeated read skips the
+# schema-inference job; a rewritten or extended path is seen as before
+# ---------------------------------------------------------------------------
+
+NAMES_Q = f"PREFIX sa: <{NS}>\nSELECT ?name WHERE {{ ?n a sa:Nation ; sa:name ?name . }}"
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def nation(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/nation.parquet")
+
+
+@pytest.mark.parametrize("backend", ["dataframe", "sql"])
+def test_repeated_query_launches_only_its_action_jobs(spark, nation, tmp_path, backend):
+    path = str(tmp_path / "nation")
+    nation.write.parquet(path)
+    engine = Engine(spark, MappingIndex([_nation_mapping(path, "parquet")]))
+    first, infer_jobs = _jobs(spark, lambda: engine.sparql(NAMES_Q, backend=backend))
+    assert infer_jobs >= 1  # the first read infers the schema
+    rows, action_jobs = _jobs(spark, first.collect)
+    again, construct_jobs = _jobs(spark, lambda: engine.sparql(NAMES_Q, backend=backend))
+    assert construct_jobs == 0
+    rows_again, again_jobs = _jobs(spark, again.collect)
+    assert again_jobs == action_jobs
+    assert sorted(rows_again) == sorted(rows) and len(rows) == 25
+
+
+def test_memo_is_per_session_and_skips_globs(spark, nation, tmp_path):
+    path = str(tmp_path / "nation")
+    nation.write.parquet(path)
+    m = _nation_mapping(path, "parquet")
+    load_source(spark, m)
+    assert _jobs(spark, lambda: load_source(spark, m))[1] == 0
+    other = spark.newSession()
+    assert _jobs(other, lambda: load_source(other, m))[1] >= 1
+    glob = _nation_mapping(path + "/*.parquet", "parquet")
+    for _ in range(2):  # a glob has no file status: never memoized
+        assert _jobs(spark, lambda: load_source(spark, glob))[1] >= 1
+
+
+def test_overwritten_source_is_reinferred(spark, nation, tmp_path):
+    from pyspark.sql import functions as F
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "nation")
+    nation.write.parquet(path)
+    m = _nation_mapping(path, "parquet")
+    m.predicates[NS + "extra"] = "n_extra"
+    engine = Engine(spark, MappingIndex([m]))
+    extra_q = f"PREFIX sa: <{NS}>\nSELECT ?x WHERE {{ ?n a sa:Nation ; sa:extra ?x . }}"
+    assert len(engine.sparql(NAMES_Q).collect()) == 25
+    with pytest.raises(AnalysisException, match="n_extra"):
+        engine.sparql(extra_q).collect()
+    # same path, new column: the next query sees it
+    nation.withColumn("n_extra", F.upper("n_name")).write.mode("overwrite").parquet(path)
+    got = sorted(r.x for r in engine.sparql(extra_q).collect())
+    assert got == sorted(r.n_name.upper() for r in nation.collect())
+    # same path, mapped column gone: the same error as for a fresh read
+    nation.drop("n_name").write.mode("overwrite").parquet(path)
+    with pytest.raises(AnalysisException, match="n_name"):
+        engine.sparql(NAMES_Q).collect()
+
+
+def test_file_appended_to_directory_source_is_read(spark, nation, tmp_path):
+    path = str(tmp_path / "nation")
+    nation.write.parquet(path)
+    engine = Engine(spark, MappingIndex([_nation_mapping(path, "parquet")]))
+    assert engine.sparql(NAMES_Q).count() == 25
+    nation.write.mode("append").parquet(path)
+    assert engine.sparql(NAMES_Q).count() == 50
+
+
+def test_csv_infer_schema_option_keys_the_memo(spark, staged):
+    inferred = _nation_mapping(staged["csv"], "csv")
+    as_text = _nation_mapping(staged["csv"], "csv")
+    as_text.options = {"inferSchema": "false"}
+    for m, kind in [(inferred, "int"), (as_text, "string"), (inferred, "int")]:
+        field = load_source(spark, m).schema["n_nationkey"]
+        assert field.dataType.simpleString() == kind

@@ -156,8 +156,47 @@ def test_backslash_literals_agree_across_backends(engine):
     sql_rows = _rows(engine.sparql(q, backend="sql"))
     assert df_rows == sql_rows
     assert len(df_rows) > 0
-    # the backslash survives verbatim (no escape processing anywhere)
-    assert all("\\t-tag" in r[1] for r in df_rows)
+    # "\t" is a SPARQL ECHAR and decodes to a tab; "\w" and "\s" are
+    # not, so the rlike pattern keeps its backslashes verbatim
+    assert all(r[1].endswith("\t-tag") for r in df_rows)
+
+
+@pytest.fixture(scope="module")
+def escaped_engine(spark, tmp_path_factory):
+    """One entity whose names hold the characters SPARQL escapes."""
+    from sparkall_spark.fixtures import NS
+    from sparkall_spark.mappings import EntityMapping, MappingIndex
+
+    path = str(tmp_path_factory.mktemp("echar") / "names")
+    names = ['x"y', "a' OR 1=1", "back\\slash", "tab\there", "plain"]
+    spark.createDataFrame(list(enumerate(names)), "id int, name string") \
+        .write.parquet(path)
+    return Engine(spark, MappingIndex([EntityMapping(
+        name="Thing", source=path, source_type="parquet", id_attr="id",
+        predicates={NS + "name": "name"}, class_iri=NS + "Thing",
+    )]))
+
+
+@pytest.mark.parametrize("literal, value", [
+    (r'"x\"y"', 'x"y'),
+    (r'"a\' OR 1=1"', "a' OR 1=1"),
+    (r'"back\\slash"', "back\\slash"),
+    (r'"tab\there"', "tab\there"),
+])
+@pytest.mark.parametrize("backend", ["dataframe", "sql"])
+def test_echar_escapes_decode_in_every_literal_position(escaped_engine, backend, literal, value):
+    """SPARQL 1.1 §19.7: string literals decode their ECHAR escapes in
+    FILTER, VALUES, triple objects and BIND, on both backends."""
+    head = PREFIX_BLOCK + "SELECT ?name WHERE { ?t a sa:Thing ; sa:name ?name . "
+    for body in (f"FILTER (?name = {literal}) }}",
+                 f"VALUES ?name {{ {literal} }} }}",
+                 f"?t sa:name {literal} . }}"):
+        got = escaped_engine.sparql(head + body, backend=backend).collect()
+        assert [r.name for r in got] == [value], body
+    q = (PREFIX_BLOCK + "SELECT ?v WHERE { ?t a sa:Thing ; sa:name ?name . "
+         f'FILTER (?name = "plain") BIND(CONCAT(?name, {literal}) AS ?v) }}')
+    assert [r.v for r in escaped_engine.sparql(q, backend=backend).collect()] \
+        == ["plain" + value]
 
 
 def test_to_sql_is_single_statement(engine):
